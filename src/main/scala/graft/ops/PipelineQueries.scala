@@ -99,13 +99,16 @@ object PipelineQueries {
       .agg(expr("transform(array_sort(collect_list(struct(f, tok))), x -> x.tok)")
         .as("stoks"))
     // τ = 0.5: prefix p = n - ceil(n/2) + 1 = n div 2 + 1.
-    // localCheckpoint(true): the candidate self-join reads this frame
-    // on BOTH sides, and without the eager materialization the whole
-    // upstream (shingle explode → df join → per-doc sort → prefix
-    // explode, freq aggregation included) executes twice — the r17
-    // before-plan showed two full copies of operators 8-44 with no
-    // ReusedExchange (guide §2.4: don't recompute what one exchange
-    // can serve). `n` rides along for the length filter below.
+    // cache(): the candidate self-join reads this frame on BOTH sides,
+    // and without it the whole upstream (shingle explode → df join →
+    // per-doc sort → prefix explode, freq aggregation included)
+    // executes twice — the r17 before-plan showed two full copies of
+    // operators 8-44 with no ReusedExchange (guide §2.4: don't
+    // recompute what one exchange can serve). Not an eager
+    // localCheckpoint(true): r17 measured that at 2× slower (5.0 →
+    // 10.7-12.8 s, the materialization job cost more than the
+    // duplication), while the cache keeps lazy single evaluation.
+    // `n` rides along for the length filter below.
     val pref = ordered
       .withColumn("n", size(col("stoks")))
       .select(col("doc_id"), col("n"),

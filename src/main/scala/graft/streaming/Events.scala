@@ -2,23 +2,55 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-/** Structured Streaming over the events table (SURVEY §2.2
-  * `stream_window`).
-  *
-  * The same declarative plan (tumbling 1-hour window per event_type)
-  * runs as a continuous query: `readStream` → window agg → sink. Here
-  * the parquet file drives it as a bounded stream (AvailableNow) into a
-  * memory sink so the result is a normal DataFrame; in production the
-  * source is a directory/Kafka feed, the trigger is continuous, and a
-  * watermark + append mode bound the state store.
+/** Structured Streaming keys (SURVEY §2.2 `stream_*`): each builds a
+  * continuous plan (`readStream` → stateful operators → sink) and
+  * drives it over the parquet fixture as a BOUNDED stream. In
+  * production the source is a directory/Kafka feed and the trigger is
+  * continuous; here every query goes through one runner with one
+  * contract:
+  *   - bounded: [[runBounded]] starts it under `Trigger.AvailableNow`
+  *     and waits for it to drain its input;
+  *   - metered: its progress lands in [[StreamMeter]] under its name,
+  *     `<tag>_<n>` with the run counter stripped;
+  *   - cleaned up: on success and on failure the query is stopped and
+  *     a memory sink's view (registered under the query name) dropped,
+  *     so a long-lived session accumulates no views or live queries.
+  * [[drain]] is the memory-sink case: it returns the sink's contents as
+  * a DataFrame that stays readable after its view is gone.
   */
 object Events {
 
   private val n = new AtomicInteger(0)
+
+  /** Runs `writer` (its sink already configured) to completion as
+    * `<tag>_<n>` and hands the finished query to `readout` before the
+    * cleanup above runs. A failed run rethrows the query's exception. */
+  private[graft] def runBounded[T](writer: DataStreamWriter[Row], tag: String)(
+      readout: StreamingQuery => T): T = {
+    val q = writer.queryName(s"${tag}_${n.incrementAndGet()}")
+      .trigger(Trigger.AvailableNow()).start()
+    try {
+      q.awaitTermination()
+      StreamMeter.record(q)
+      readout(q)
+    } finally {
+      q.stop()
+      q.sparkSession.catalog.dropTempView(q.name)
+    }
+  }
+
+  /** Runs `df` into a memory sink in output `mode` and returns the
+    * sink's contents. The frame is resolved before the view is dropped,
+    * so it keeps reading the sink's rows. */
+  private[graft] def drain(df: DataFrame, mode: String, tag: String): DataFrame =
+    runBounded(df.writeStream.outputMode(mode).format("memory"), tag) { q =>
+      df.sparkSession.table(q.name)
+    }
 
   /** Canonical event-time columns for a streamed events frame — the
     * streaming twin of [[graft.sources.Tables.events]]'s type guard.
@@ -106,16 +138,7 @@ object Events {
         .groupBy(col("event_type"), col("bin"))
         .agg(count(lit(1)).as("n"),
           round(sum(col("value")), 2).as("sum_value"))
-      val name = s"graft_stream_hist_${n.incrementAndGet()}"
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    StreamMeter.record(q)
-      spark.table(name)
+      drain(agg, "complete", "graft_stream_hist")
         .orderBy(col("event_type"), col("bin"))
     }
 
@@ -127,16 +150,7 @@ object Events {
     val agg = ev
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-    val name = s"graft_stream_window_${n.incrementAndGet()}"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name)
+    drain(agg, "complete", "graft_stream_window")
       .select(unix_timestamp(col("window.start")).as("win_start_s"),
         col("event_type"), col("n"), col("sum_value"))
       .orderBy(col("win_start_s"), col("event_type"))
@@ -152,13 +166,7 @@ object Events {
     val agg = ev
       .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-    val name = s"graft_stream_sliding_${n.incrementAndGet()}"
-    val q = agg.writeStream
-      .outputMode("complete").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name)
+    drain(agg, "complete", "graft_stream_sliding")
       .select(unix_timestamp(col("window.start")).as("win_start_s"),
         col("event_type"), col("n"), col("sum_value"))
       .orderBy(col("win_start_s"), col("event_type"))
@@ -192,13 +200,7 @@ object Events {
       .select(col("user_id"), col("event_type"),
         to_date(col("ts")).as("day"), col("ts"))
       .dropDuplicatesWithinWatermark("user_id", "event_type", "day")
-    val name = s"graft_stream_dedup_${n.incrementAndGet()}"
-    val q = firstSeen.writeStream
-      .outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name)
+    drain(firstSeen, "append", "graft_stream_dedup")
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_users"))
       .orderBy(col("event_type"))
@@ -222,7 +224,6 @@ object Events {
     new java.util.concurrent.ConcurrentHashMap[String, String]
 
   def streamWatermarkAppend(spark: SparkSession, sfDir: String): DataFrame = withStreamShuffle(spark) {
-    import java.nio.file.Files
     val work = graft.util.Scratch.dir("graft_wm")
     val src = wmSrcDirs.computeIfAbsent(sfDir, _ => {
       val dir = graft.util.Scratch.dir("graft_wm_src").toString + "/in"
@@ -248,13 +249,10 @@ object Events {
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      val q = agg.writeStream
+      runBounded(agg.writeStream
         .outputMode("append").format("parquet")
         .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    StreamMeter.record(q)
+        .option("checkpointLocation", ckpt), "graft_stream_wm")(_ => ())
     }
     runOnce() // emits nothing; checkpoints state + watermark
     // sentinel far beyond every real event pushes the watermark past
@@ -288,13 +286,7 @@ object Events {
     val pairs = clicks.join(purchases,
       col("user_id") === col("p_user") &&
         col("p_ts") >= col("c_ts") && col("p_ts") <= col("c_ts") + 3600L)
-    val name = s"graft_stream_join_${n.incrementAndGet()}"
-    val q = pairs.writeStream
-      .outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name)
+    drain(pairs, "append", "graft_stream_join")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy(col("user_id"))
@@ -319,13 +311,7 @@ object Events {
       .groupBy(col("tier"))
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 2).as("sum_value"))
-    val name = s"graft_stream_static_${n.incrementAndGet()}"
-    val q = agg.writeStream
-      .outputMode("complete").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name).orderBy(col("tier"))
+    drain(agg, "complete", "graft_stream_static").orderBy(col("tier"))
   }
 
   /** Stream-stream LEFT OUTER join with watermarks on both sides —
@@ -356,13 +342,7 @@ object Events {
         col("p_time") >= col("c_time") &&
         col("p_time") <= col("c_time") + expr("INTERVAL 1 HOUR"),
       "left_outer")
-    val name = s"graft_stream_louter_${n.incrementAndGet()}"
-    val q = joined.writeStream
-      .outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name)
+    drain(joined, "append", "graft_stream_louter")
       .groupBy(col("user_id"))
       .agg(count(col("p_ts")).as("n_matched"),
         (count(lit(1)) - count(col("p_ts"))).as("n_expired_unmatched"))
@@ -403,10 +383,7 @@ object Events {
       b.filter(!bad).write.mode("append")
         .parquet(s"$work/clean")
     }
-    val q = raw.writeStream.foreachBatch(fold)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
+    runBounded(raw.writeStream.foreachBatch(fold), "graft_stream_dq")(_ => ())
     val quar = spark.read.parquet(s"$work/quarantine")
     val clean = spark.read.parquet(s"$work/clean")
     val total = quar.count() + clean.count()
@@ -446,13 +423,7 @@ object Events {
       .agg(count(lit(1)).as("n_events"),
         min(unix_timestamp(col("ts"))).as("start_s"),
         max(unix_timestamp(col("ts"))).as("end_s"))
-    val name = s"graft_stream_sessnat_${n.incrementAndGet()}"
-    val q = agg.writeStream
-      .outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name)
+    drain(agg, "append", "graft_stream_sessnat")
       .select(col("user_id"), col("n_events"), col("start_s"),
         col("end_s"))
       .orderBy(col("user_id"), col("start_s"))
@@ -480,13 +451,7 @@ object Events {
         col("event_type"))
       .agg(count(lit(1)).as("n_buckets"), sum(col("n5")).as("n_events"),
         round(sum(col("v5")), 2).as("sum_value"))
-    val name = s"graft_stream_chained_${n.incrementAndGet()}"
-    val q = outer.writeStream
-      .outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name)
+    drain(outer, "append", "graft_stream_chained")
       .select(unix_timestamp(col("window.start")).as("hour_start_s"),
         col("event_type"), col("n_buckets"), col("n_events"),
         col("sum_value"))
@@ -526,13 +491,7 @@ object Events {
         col("p_time") >= col("c_time") &&
         col("p_time") <= col("c_time") + expr("INTERVAL 1 HOUR"),
       "full_outer")
-    val name = s"graft_stream_fouter_${n.incrementAndGet()}"
-    val q = joined.writeStream
-      .outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name)
+    drain(joined, "append", "graft_stream_fouter")
       .groupBy(coalesce(col("user_id"), col("p_user")).as("uid"))
       .agg(
         sum(when(col("c_ts").isNotNull && col("p_ts").isNotNull, 1L)
@@ -570,12 +529,8 @@ object Events {
           (coalesce(col("_old"), lit(0L)) + col("_new")).as("n_events"))
       eng.upsert("user_counts", upd)
     }
-    val q = raw.writeStream
-      .foreachBatch(fold)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    StreamMeter.record(q)
+    runBounded(raw.writeStream.foreachBatch(fold),
+      "graft_stream_upsert")(_ => ())
     eng.table("user_counts")
       .select(col("rowNum").as("user_id"), col("n_events"))
       .orderBy(col("user_id"))
@@ -593,7 +548,6 @@ object Events {
     * over corpus+delta. The delta is the corpus's purchase rows, so
     * the oracle replays it with pure SQL: n = count(*) + purchases. */
   def streamIncrementalIngest(spark: SparkSession, sfDir: String): DataFrame = withStreamShuffle(spark) {
-    import java.nio.file.Files
     val work = graft.util.Scratch.dir("graft_incr")
     val src = s"$work/in"
     val slim = graft.sources.Tables.events(spark, sfDir)
@@ -607,15 +561,12 @@ object Events {
       batch.groupBy(col("user_id"))
         .agg(count(lit(1)).as("_n"), sum(col("value")).as("_v"))
         .write.mode("append").parquet(out)
-    def runOnce(): Long = {
-      val q = spark.readStream.schema(schema).parquet(s"$src/*.parquet")
+    def runOnce(): Long =
+      runBounded(spark.readStream.schema(schema).parquet(s"$src/*.parquet")
         .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    StreamMeter.record(q)
-      q.recentProgress.map(_.numInputRows).sum
-    }
+        .option("checkpointLocation", ckpt), "graft_stream_incr") {
+        _.recentProgress.map(_.numInputRows).sum
+      }
     val n1 = runOnce()
     val delta = slim.filter(col("event_type") === "purchase")
     val nDelta = delta.count()
@@ -703,13 +654,8 @@ object Events {
     val sessions = evs.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
 
-    val name = s"graft_stream_sess_${n.incrementAndGet()}"
-    val q = sessions.toDF().writeStream
-      .outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name).orderBy(col("user_id"), col("sess_id"))
+    drain(sessions.toDF(), "append", "graft_stream_sess")
+      .orderBy(col("user_id"), col("sess_id"))
   }
 
   case class LatestRow(user_id: Long, event_id: Long, event_type: String,
@@ -738,13 +684,7 @@ object Events {
     }
     val latest = evs.groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(fn)
-    val name = s"graft_stream_latest_${n.incrementAndGet()}"
-    val q = latest.toDF().writeStream
-      .outputMode("update").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name)
+    drain(latest.toDF(), "update", "graft_stream_latest")
       .groupBy(col("user_id"))
       .agg(max_by(
         struct(col("event_id"), col("event_type"), col("ts_us"), col("value")),
@@ -793,13 +733,7 @@ object Events {
     val tops = evs.groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Update,
         GroupStateTimeout.NoTimeout)(fn)
-    val name = s"graft_stream_topk_${n.incrementAndGet()}"
-    val q = tops.toDF().writeStream
-      .outputMode("update").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    val all = spark.table(name)
+    val all = drain(tops.toDF(), "update", "graft_stream_topk")
     val lastEpoch = all.groupBy(col("event_type").as("et"))
       .agg(max(col("epoch")).as("last_epoch"))
     all.join(lastEpoch, col("event_type") === col("et") &&
@@ -867,18 +801,15 @@ object Events {
     val flagged = evs.groupByKey(_.event_type)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
-    val name = s"graft_stream_anom_${n.incrementAndGet()}"
-    val q = flagged.toDF().writeStream
-      .outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches <= 1,
-      s"streamAnomaly exact-replay contract needs a single micro-batch " +
-        s"(got $dataBatches with rows) — set maxFilesPerTrigger/compact " +
-        s"the source, or switch the fold to watermark-buffered ordering")
-    spark.table(name).orderBy(col("event_type"), col("event_id"))
+    runBounded(flagged.toDF().writeStream.outputMode("append")
+        .format("memory"), "graft_stream_anom") { q =>
+      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+      require(dataBatches <= 1,
+        s"streamAnomaly exact-replay contract needs a single micro-batch " +
+          s"(got $dataBatches with rows) — set maxFilesPerTrigger/compact " +
+          s"the source, or switch the fold to watermark-buffered ordering")
+      spark.table(q.name)
+    }.orderBy(col("event_type"), col("event_id"))
   }
 
   case class PatEvent(user_id: Long, event_id: Long, event_type: String,
@@ -945,13 +876,7 @@ object Events {
     }
     val out = evs.groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(fn)
-    val name = s"graft_stream_pat_${n.incrementAndGet()}"
-    val q = out.toDF().writeStream
-      .outputMode("update").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name)
+    drain(out.toDF(), "update", "graft_stream_pat")
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("n_matches"), col("first_match_ts"),
         col("min_dur_s"), col("max_dur_s")), col("epoch")).as("_r"))
@@ -1033,16 +958,11 @@ object Events {
           size(array_intersect(col("_shn"), col("old_sh"))).cast("double") /
             size(array_union(col("_shn"), col("old_sh"))) >= 0.5,
           col("old_id"))).as("near_id"))
-    val name = s"graft_stream_minhash_${n.incrementAndGet()}"
-    val q = agg.writeStream
-      .outputMode("complete").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
+    val sink = drain(agg, "complete", "graft_stream_minhash")
     // the memory sink holds the results; the index caches are done
     exactIdx.unpersist(blocking = false)
     oldIdx.unpersist(blocking = false)
-    spark.table(name)
+    sink
       .select(col("doc_id"),
         when(col("exact_id").isNotNull, "exact")
           .when(col("near_id").isNotNull, "near")
@@ -1092,13 +1012,7 @@ object Events {
       .parquet(dir)
     val agg = st.agg(CountMinSketch.sketch(col("l_suppkey"), dep, w)
       .as("sk"))
-    val name = s"graft_stream_cms_${n.incrementAndGet()}"
-    val q = agg.writeStream
-      .outputMode("complete").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    val sketch = spark.table(name)
+    val sketch = drain(agg, "complete", "graft_stream_cms")
     val top = li.groupBy(col("l_suppkey").as("s_suppkey"))
       .agg(count(lit(1)).as("n_exact"))
       .orderBy(col("n_exact").desc, col("s_suppkey")).limit(10)
@@ -1135,13 +1049,7 @@ object Events {
       .option("maxFilesPerTrigger", "1") // force >1 micro-batch
       .parquet(dir)
     val agg = st.agg(Kll.sketch(col("v"), 800).as("sk"))
-    val name = s"graft_stream_kll_${n.incrementAndGet()}"
-    val q = agg.writeStream
-      .outputMode("complete").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    val est = spark.table(name).select(
+    val est = drain(agg, "complete", "graft_stream_kll").select(
       Kll.quantile(col("sk"), 0.25).as("e25"),
       Kll.quantile(col("sk"), 0.50).as("e50"),
       Kll.quantile(col("sk"), 0.90).as("e90"),
@@ -1182,16 +1090,10 @@ object Events {
       .parquet(dir)
     val agg = st.groupBy(col("event_type"))
       .agg(Theta.sketch(col("user_id"), 14).as("sk"))
-    val name = s"graft_stream_theta_${n.incrementAndGet()}"
-    val q = agg.writeStream
-      .outputMode("complete").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
     val exact = ev.groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_exact"))
     val est = Theta.estimate(col("sk"))
-    spark.table(name).join(exact, Seq("event_type"))
+    drain(agg, "complete", "graft_stream_theta").join(exact, Seq("event_type"))
       .select(col("event_type"), col("n_exact"),
         round(est).cast("long").as("est_users"),
         (abs(est - col("n_exact")) <=
@@ -1253,12 +1155,7 @@ object Events {
     val vers = ev.groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Update,
         GroupStateTimeout.NoTimeout)(fn)
-    val name = s"graft_stream_scd2_${n.incrementAndGet()}"
-    val q = vers.toDF().writeStream
-      .outputMode("update").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
+    val sink = drain(vers.toDF(), "update", "graft_stream_scd2")
     // The fold sorts WITHIN each micro-batch only, so convergence to
     // the batch SCD2 table needs per-user event-time order ACROSS
     // batches — which the file source does not promise. The guard is
@@ -1267,14 +1164,14 @@ object Events {
     // epoch 1 means no tracked user was split across batches (a
     // second batch holding only filtered-out users is harmless and
     // passes — the r9 ADVICE hazard with source-level numInputRows).
-    val maxEpoch = spark.table(name)
+    val maxEpoch = sink
       .agg(coalesce(max(col("epoch")), lit(0L))).head.getLong(0)
     require(maxEpoch <= 1,
       s"streamScd2Build in-batch ordering contract needs each user's " +
         s"events in a single micro-batch (a user folded over $maxEpoch " +
         s"batches) — compact the source or buffer late rows by " +
         s"watermark before folding")
-    spark.table(name)
+    sink
       .groupBy(col("user_id"), col("idx"))
       .agg(max_by(struct(col("event_type"), col("valid_from_s"),
         col("valid_to_s"), col("is_current")), col("epoch")).as("_v"))
@@ -1349,22 +1246,17 @@ object Events {
     val out = ev.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
-    val name = s"graft_stream_asof_${n.incrementAndGet()}"
-    val q = out.toDF().writeStream
-      .outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
+    val sink = drain(out.toDF(), "append", "graft_stream_asof")
     // epoch read over ALL rows including sentinels: every fold emits
     // one, so a tracked user split across batches is visible even if
     // the later batch held only clicks (the r10 ADVICE hazard)
-    val maxEpoch = spark.table(name)
+    val maxEpoch = sink
       .agg(coalesce(max(col("epoch")), lit(0L))).head.getLong(0)
     require(maxEpoch <= 1,
       s"streamAsofJoin ordering contract needs each user's events in " +
         s"a single micro-batch (a user folded over $maxEpoch batches) " +
         s"— compact the source or buffer late rows by watermark")
-    spark.table(name)
+    sink
       .filter(col("event_id") >= 0) // drop the per-fold epoch sentinels
       .select(col("user_id"), col("event_id"), col("ts_s"),
         col("click_ts_s"), col("lag_s"))
@@ -1460,13 +1352,7 @@ object Events {
         col("p_time") >= col("e_time") - expr("INTERVAL 1 HOUR") &&
         col("p_time") <= col("e_time"),
       "left_outer")
-    val name = s"graft_stream_asof_int_${n.incrementAndGet()}"
-    val q = joined.writeStream
-      .outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name)
+    drain(joined, "append", "graft_stream_asof_int")
       .filter(col("event_id") >= 0) // drop the sentinel left rows
       .groupBy(col("event_id"))
       .agg(max_by(col("pval"),
@@ -1525,18 +1411,12 @@ object Events {
     val short = adc.groupBy(col("q_id"))
       .agg(graft.functions.TopKByScore.topK(col("adc"), col("c_id"), 50)
         .as("short"))
-    val name = s"graft_stream_annprobe_${n.incrementAndGet()}"
-    val q = short.writeStream
-      .outputMode("complete").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    coded.unpersist(blocking = false)
     // post-sink exact re-rank of the shortlist — the identical
     // |q|·shortlist join the batch pipeline runs
-    val cand = spark.table(name)
+    val cand = drain(short, "complete", "graft_stream_annprobe")
       .select(col("q_id"), explode(col("short")).as("_s"))
       .select(col("q_id"), col("_s.id").as("c_id"))
+    coded.unpersist(blocking = false)
     val qv = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"),
         col("embedding").cast("array<double>").as("_qe"))
@@ -1584,14 +1464,9 @@ object Events {
       .join(broadcast(model), Seq("bucket")) // stream-static: no state
       .groupBy(col("doc_id"), col("source"))
       .agg(count(lit(1)).as("n_tok"), sum(col("w_micro")).as("_sm"))
-    val name = s"graft_stream_dsir_${n.incrementAndGet()}"
-    val q = scored.writeStream
-      .outputMode("complete").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
+    val sink = drain(scored, "complete", "graft_stream_dsir")
     model.unpersist(blocking = false)
-    spark.table(name)
+    sink
       .select(col("doc_id"), col("source"), col("n_tok"),
         round(col("_sm").cast("double") / 1e6, 6).as("dsir_score"))
       .orderBy(col("dsir_score").desc, col("doc_id"))
@@ -1698,13 +1573,7 @@ object Events {
     val carts = evs.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(fn)
-    val name = s"graft_stream_cart_${n.incrementAndGet()}"
-    val q = carts.toDF().writeStream
-      .outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name)
+    drain(carts.toDF(), "append", "graft_stream_cart")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_abandoned"),
         min(col("click_ts_s")).as("first_abandoned_s"),
@@ -1726,12 +1595,7 @@ object Events {
         .select(timestamp_seconds(col("ts_s")).as("uts"),
           round(col("value") * 100).cast("long").as("vc"))
       val agg = graft.ops.Analytics.tzCensus(ev)
-      val name = s"graft_stream_tz_${n.incrementAndGet()}"
-      val q = agg.writeStream.outputMode("complete").format("memory")
-        .queryName(name).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      StreamMeter.record(q)
-      spark.table(name)
+      drain(agg, "complete", "graft_stream_tz")
         .unionByName(graft.ops.Analytics.tzProbes(spark))
         .orderBy(col("zone"), col("local_key"))
     }
@@ -1819,12 +1683,7 @@ object Events {
             .as(s"sp_${a}_$b") } :+
         count(lit(1)).as("n")
       val m = base.agg(aggs.head, aggs.tail: _*)
-      val name = s"graft_stream_corr_${n.incrementAndGet()}"
-      val q = m.writeStream.outputMode("complete").format("memory")
-        .queryName(name).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      StreamMeter.record(q)
-      val mm = spark.table(name).localCheckpoint(true)
+      val mm = drain(m, "complete", "graft_stream_corr").localCheckpoint(true)
       pairsL.map { case (a, b) =>
         mm.select(lit(a).as("x_col"), lit(b).as("y_col"), col("n"),
           (floor(
@@ -1857,12 +1716,7 @@ object Events {
         .groupBy(col("o_custkey").as("cust"))
         .agg(sum(round(col("o_totalprice") * 100).cast("long"))
           .as("cents"))
-      val name = s"graft_stream_atkinson_${n.incrementAndGet()}"
-      val q = agg.writeStream.outputMode("complete").format("memory")
-        .queryName(name).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      StreamMeter.record(q)
-      spark.table(name)
+      drain(agg, "complete", "graft_stream_atkinson")
         .filter(col("cents") > 0)
         .select(col("cents"),
           expr("CAST(floor(ln(CAST(cents AS DOUBLE)) * 1e9 + 0.5)" +
@@ -1905,15 +1759,10 @@ object Events {
         .withWatermark("ts", "2 days")
         .select(col("user_id"), to_date(col("ts")).as("day"), col("ts"))
         .dropDuplicatesWithinWatermark("user_id", "day")
-      val name = s"graft_stream_nvr_${n.incrementAndGet()}"
-      val q = firstSeen.writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      StreamMeter.record(q)
       // localCheckpoint: the memory-sink view cannot self-join (its
       // watermark-tagged attributes fail conflicting-reference dedup)
-      val daily = spark.table(name).select(col("user_id"), col("day"))
-        .localCheckpoint(true)
+      val daily = drain(firstSeen, "append", "graft_stream_nvr")
+        .select(col("user_id"), col("day")).localCheckpoint(true)
       val first = daily.groupBy(col("user_id"))
         .agg(min(col("day")).as("first_day"))
       daily.join(broadcast(first), "user_id")
@@ -1946,12 +1795,7 @@ object Events {
         .groupBy(col("day"))
         .agg(count(lit(1)).as("n_trades"), sum(col("q")).as("qty_sum"),
           sum(col("c")).as("rev_cents"))
-      val name = s"graft_stream_vwap_${n.incrementAndGet()}"
-      val q = agg.writeStream.outputMode("complete").format("memory")
-        .queryName(name).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      StreamMeter.record(q)
-      spark.table(name)
+      drain(agg, "complete", "graft_stream_vwap")
         .select(col("day"), col("n_trades"), col("qty_sum"),
           col("rev_cents"),
           (floor(col("rev_cents").cast("double") / col("qty_sum") / 100
@@ -1976,12 +1820,7 @@ object Events {
           round(col("l_extendedprice") * 100).cast("long").as("c"))
         .groupBy(col("day"))
         .agg(max(col("c")).as("h"), min(col("c")).as("l"))
-      val name = s"graft_stream_park_${n.incrementAndGet()}"
-      val q = agg.writeStream.outputMode("complete").format("memory")
-        .queryName(name).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      StreamMeter.record(q)
-      spark.table(name)
+      drain(agg, "complete", "graft_stream_park")
         .withColumn("p12", floor(
           pow(log(col("h").cast("double") / col("l").cast("double")), 2)
             * lit(1e12)).cast("long"))
@@ -2017,12 +1856,7 @@ object Events {
           .as("c"),
           sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("p"))
-      val name = s"graft_stream_hell_${n.incrementAndGet()}"
-      val q = agg.writeStream.outputMode("complete").format("memory")
-        .queryName(name).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      StreamMeter.record(q)
-      spark.table(name)
+      drain(agg, "complete", "graft_stream_hell")
         .agg(count(lit(1)).as("n_bins"),
           sum(col("c")).as("nc"), sum(col("p")).as("np"),
           sum(floor(sqrt((col("c") * col("p")).cast("double")) * 1e6)
@@ -2061,12 +1895,7 @@ object Events {
         .groupBy(col("bin"))
         .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"),
           sum(col("v")).as("sv"))
-      val name = s"graft_stream_cal_${n.incrementAndGet()}"
-      val q = agg.writeStream.outputMode("complete").format("memory")
-        .queryName(name).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      StreamMeter.record(q)
-      val bins = spark.table(name)
+      val bins = drain(agg, "complete", "graft_stream_cal")
         .withColumn("conf6", expr(
           s"(CAST(sv AS DECIMAL(38,0)) * 1000000) div" +
             s" (CAST(n AS DECIMAL(38,0)) * ${vmax})"))
@@ -2170,12 +1999,7 @@ object Events {
         .groupBy(window(col("ts"), "1 day"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("vc"))
-      val name = s"graft_stream_late_${n.incrementAndGet()}"
-      val q = agg.writeStream.outputMode("update").format("memory")
-        .queryName(name).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      StreamMeter.record(q)
-      spark.table(name)
+      drain(agg, "update", "graft_stream_late")
         .select(col("window.start").cast("date").as("day"),
           col("n"), col("vc"))
         .groupBy(col("day"))
@@ -2211,13 +2035,7 @@ object Events {
       .withWatermark("ts", "45 days")
       .select(col("user_id"), col("ts"))
       .dropDuplicatesWithinWatermark("user_id")
-    val name = s"graft_stream_srm_${n.incrementAndGet()}"
-    val q = firstSeen.writeStream
-      .outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name)
+    drain(firstSeen, "append", "graft_stream_srm")
       .select(pmod(graft.functions.exprs.md5Lower64(
         col("user_id").cast("string"))
         .bitwiseAND(lit(Long.MaxValue)), lit(2L)).as("arm"))
@@ -2257,13 +2075,7 @@ object Events {
         round(max_by(col("value"), struct(col("ts"), col("event_id"))), 2)
           .as("close"),
         round(sum(col("value")), 2).as("sum_value"))
-    val name = s"graft_stream_ohlc_${n.incrementAndGet()}"
-    val q = agg.writeStream
-      .outputMode("complete").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    spark.table(name)
+    drain(agg, "complete", "graft_stream_ohlc")
       .select(unix_timestamp(col("window.start")).as("bar"),
         col("event_type"), col("n_events"), col("open"), col("high"),
         col("low"), col("close"), col("sum_value"))
@@ -2301,13 +2113,7 @@ object Events {
       .parquet(dir)
     val counts = st.groupBy(bucketOf.as("bucket"))
       .agg(count(lit(1)).as("n_tgt"))
-    val name = s"graft_stream_psi_${n.incrementAndGet()}"
-    val q = counts.writeStream
-      .outputMode("complete").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    val hist = spark.table(name)
+    val hist = drain(counts, "complete", "graft_stream_psi")
       .join(ref, Seq("bucket"), "full_outer")
       .select(col("bucket"), coalesce(col("n_ref"), lit(0L)).as("n_ref"),
         coalesce(col("n_tgt"), lit(0L)).as("n_tgt"))
@@ -2388,19 +2194,14 @@ object Events {
     val rows = ev.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update,
         GroupStateTimeout.NoTimeout)(fn)
-    val name = s"graft_stream_funnel_${n.incrementAndGet()}"
-    val q = rows.toDF().writeStream
-      .outputMode("update").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    val maxEpoch = spark.table(name)
+    val sink = drain(rows.toDF(), "update", "graft_stream_funnel")
+    val maxEpoch = sink
       .agg(coalesce(max(col("epoch")), lit(0L))).head.getLong(0)
     require(maxEpoch <= 1,
       s"streamFunnel in-batch ordering contract needs each user's " +
         s"events in a single micro-batch (a user folded over $maxEpoch " +
         s"batches)")
-    spark.table(name)
+    sink
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("has_view"), col("has_click"),
         col("has_purchase")), col("epoch")).as("_s"))
@@ -2461,19 +2262,14 @@ object Events {
     val rows = ev.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update,
         GroupStateTimeout.NoTimeout)(fn)
-    val name = s"graft_stream_gap_${n.incrementAndGet()}"
-    val q = rows.toDF().writeStream
-      .outputMode("update").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    val maxEpoch = spark.table(name)
+    val sink = drain(rows.toDF(), "update", "graft_stream_gap")
+    val maxEpoch = sink
       .agg(coalesce(max(col("epoch")), lit(0L))).head.getLong(0)
     require(maxEpoch <= 1,
       s"streamGapDetect in-batch ordering contract needs each user's " +
         s"events in a single micro-batch (a user folded over $maxEpoch " +
         s"batches)")
-    spark.table(name)
+    sink
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("n_gaps"), col("n_alerts"),
         col("max_gap_s")), col("epoch")).as("_s"))
@@ -2535,19 +2331,14 @@ object Events {
     val rows = ev.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update,
         GroupStateTimeout.NoTimeout)(fn)
-    val name = s"graft_stream_cdc_${n.incrementAndGet()}"
-    val q = rows.toDF().writeStream
-      .outputMode("update").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    val maxEpoch = spark.table(name)
+    val sink = drain(rows.toDF(), "update", "graft_stream_cdc")
+    val maxEpoch = sink
       .agg(coalesce(max(col("epoch")), lit(0L))).head.getLong(0)
     require(maxEpoch <= 1,
       s"streamCdcApply in-batch ordering contract needs each user's " +
         s"events in a single micro-batch (a user folded over $maxEpoch " +
         s"batches)")
-    spark.table(name)
+    sink
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("live"), col("v_cents"), col("n_applied")),
         col("epoch")).as("_s"))
@@ -2610,13 +2401,7 @@ object Events {
     val rows = st.groupByKey(_.source)
       .flatMapGroupsWithState(OutputMode.Update,
         GroupStateTimeout.NoTimeout)(fn)
-    val name = s"graft_stream_quota_${n.incrementAndGet()}"
-    val q = rows.toDF().writeStream
-      .outputMode("update").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeter.record(q)
-    val out = spark.table(name)
+    val out = drain(rows.toDF(), "update", "graft_stream_quota")
       .groupBy(col("source"))
       .agg(max_by(struct(col("n_selected"), col("id_checksum")),
         col("epoch")).as("_s"))
@@ -2664,7 +2449,6 @@ object Events {
       // exactness is unchanged (every (user, day) duplicate lies
       // within 1 day of the first sighting, < the 2×2d guarantee);
       // mid-run eviction stays pinned by Round14Spec.
-      val dName = s"graft_stream_daumau_d_${n.incrementAndGet()}"
       val st = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$src/*.parquet")
@@ -2673,11 +2457,8 @@ object Events {
           date_format(col("ts"), "yyyy-MM").as("month"),
           to_date(col("ts")).as("day"), col("ts"))
         .dropDuplicatesWithinWatermark("user_id", "day")
-      val q = st.writeStream.outputMode("append").format("memory")
-        .queryName(dName).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      StreamMeter.record(q)
-      val dFirst = spark.table(dName).localCheckpoint(true)
+      val dFirst = drain(st, "append", "graft_stream_daumau_d")
+        .localCheckpoint(true)
       val dm = dFirst
         .groupBy(col("month"), col("day")).agg(count(lit(1)).as("dau"))
         .groupBy(col("month"))

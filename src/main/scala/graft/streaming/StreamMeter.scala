@@ -6,8 +6,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Per-stream throughput probe: every completed streaming contract
   * query records (input rows, trigger-execution seconds, batches) from
-  * its own `recentProgress`, keyed by the memory-sink name with the
-  * run counter stripped. Bench folds the registry into
+  * its own `recentProgress`, keyed by the query name with the run
+  * counter stripped (`graft_stream_cms_7` → `graft_stream_cms`). Bench folds the registry into
   * BENCH_LAST.json as `stream_rows_per_sec`, so a regression in
   * state-store size or batch count shows up as a rate drop — the
   * end-to-end seconds alone hide it behind the ~1 s fixed micro-batch
@@ -36,8 +36,9 @@ object StreamMeter {
     * many late rows a watermark discarded (stream_late_data_audit). */
   val lateDrops = new ConcurrentHashMap[String, Long]()
 
-  /** Record a finished query's progress. Call after awaitTermination —
-    * recentProgress retains the (bounded) run just completed. */
+  /** Record a finished query's progress. [[Events.runBounded]] calls
+    * this once the query has terminated — recentProgress retains the
+    * (bounded) run just completed. Unnamed queries are skipped. */
   def record(q: StreamingQuery): Unit = {
     val ps = q.recentProgress
     if (ps.nonEmpty && q.name != null) {
