@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.DriverFold
+
 /** Duplicate-cluster resolution: candidate pairs → connected
   * components → keeper per document (SURVEY §2.3).
   *
@@ -31,46 +33,25 @@ object Components {
     * tiny-frame, PLAN-DEPTH-bound jobs at fixture scale — each round
     * costs two joins + a rollup + a checkpoint + a convergence action
     * over a few hundred rows, so stage setup dominates by 100×. When
-    * the verified pair set fits the documented driver-fold bound
-    * (`graft.components.localThreshold`, default 100k pairs — the
-    * same bound class as the SQ8/MMR/BPE folds and qScc's Tarjan
-    * finisher), collect it ONCE and label with in-JVM min-root
-    * union-find: identical fixpoint (every union hangs the larger
-    * root under the smaller, so find(x) is the component MINIMUM —
-    * exactly the BSP label). The BSP fixpoint below remains the
-    * at-scale path for pair sets above the bound; the spec forces it
-    * via localThreshold=0 and pins equality with this finisher. */
+    * the verified pair set fits the [[graft.util.DriverFold]] bound,
+    * collect it ONCE and label with in-JVM min-root union-find:
+    * identical fixpoint (every union hangs the larger root under the
+    * smaller, so find(x) is the component MINIMUM — exactly the BSP
+    * label). The BSP fixpoint below remains the at-scale path for pair
+    * sets above the bound; the spec forces it through DriverFold's
+    * conf key and pins equality with this finisher. */
   def keepers(pairs: DataFrame, maxRounds: Int = 25): DataFrame = {
     val s = pairs.sparkSession
-    val localMax = s.conf.getOption("graft.components.localThreshold")
-      .map(_.toInt).getOrElse(100000)
-    val bothLong = Seq("id_a", "id_b").forall(c =>
-      pairs.schema(c).dataType ==
-        org.apache.spark.sql.types.LongType)
-    val proj0 = pairs.select(col("id_a"), col("id_b"))
-    if (bothLong && localMax > 0) {
-      // limit-pushdown probe: ≤ localMax+1 rows ever reach the driver.
-      // Deliberately UNCACHED (r16 ADVICE weighed both ways): a cache
-      // here would force full-partition materialization and defeat the
-      // limit's early termination, costing ~0.2-0.3 s on every key
-      // whose pair set fits the local bound (measured r17) — the
-      // common case. The above-threshold double-eval the advice
-      // worried about is handled below by caching ONLY on fallback.
-      val es = proj0.take(localMax + 1)
-      // a null id coerces to 0L under Row.getLong and would silently
-      // diverge from the BSP path's null handling (r16 ADVICE): any
-      // null endpoint falls through to the distributed fixpoint
-      if (es.length <= localMax &&
-          es.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
-        return s.createDataFrame(
-          localKeepers(es.map(r => (r.getLong(0), r.getLong(1)))).toSeq)
-          .toDF("id", "keeper")
+    DriverFold.longPairs(pairs, "id_a", "id_b") match {
+      case Some(es) =>
+        return s.createDataFrame(localKeepers(es).toSeq).toDF("id", "keeper")
+      case None => ()
     }
     // BSP fallback: cache the narrow projection so the undirected
     // union below (which references it twice) and the probe's partial
     // evaluation don't each re-run the (often expensive LSH-verify)
     // upstream plan (r16 ADVICE). Unpersisted once edges materialize.
-    val proj = proj0.cache()
+    val proj = pairs.select(col("id_a"), col("id_b")).cache()
     // undirected edge list, both directions
     val edges = proj.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(proj.select(col("id_b").as("src"), col("id_a").as("dst")))
@@ -123,6 +104,8 @@ object Components {
       prevSum = nextSum
       round += 1
     }
+    // labels is an eager checkpoint: the edge cache has served its purpose
+    edges.unpersist(blocking = false)
     if (!converged)
       throw new IllegalStateException(
         s"Components.keepers did not converge within $maxRounds rounds — " +
@@ -197,7 +180,10 @@ object Components {
       .distinct()
       .cache()
     if (contracted.isEmpty) { contracted.unpersist(); return oldLabels }
+    // keepers returns a driver-local frame or an eager checkpoint, so
+    // the contracted cache is free once it returns
     val folded = keepers(contracted, maxRounds)
+    contracted.unpersist(blocking = false)
     // relabel old clusters whose keeper merged; untouched keepers pass
     // through (folded holds ONLY touched nodes — broadcast-size)
     val remap = folded

@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType,
+  StructField, StructType}
 
 import graft.sources.Tables
 
@@ -664,112 +668,58 @@ object Behavior {
     * (season), is the YEARLY revenue for that month trending across
     * years? The de-seasonalized companion to [[qMannKendall]]'s
     * within-month daily test — seasons never compare against each
-    * other, so an annual cycle cannot masquerade as trend. Rides the
-    * same bucket-dominance [[Mining.kendallDiscordant]] kernel, one
-    * (season, year) rollup on the exact e4 lattice; S, the
-    * tie-corrected variance and Z fold over the 12 tiny season
-    * frames. */
+    * other, so an annual cycle cannot masquerade as trend. One
+    * distributed (season, year) rollup on the exact e4 lattice; S, the
+    * tie-corrected variance and Z fold in the driver
+    * ([[seasonalMannKendallFold]]). */
   def qSeasonalMannKendall(s: SparkSession, d: String): DataFrame = {
     val sy = Tables.lineitem(s, d)
       .groupBy(date_format(to_date(col("l_shipdate")), "MM").as("season"),
         year(to_date(col("l_shipdate"))).cast("long").as("yr"))
       .agg(sum(round(col("l_extendedprice") * 100).cast("long") *
         round((lit(1) - col("l_discount")) * 100).cast("long")).as("e4"))
-      .select(col("season").as("nation"), col("yr").as("k"),
-        col("yr").as("x_cents"), col("e4").as("y_cents"))
-      .localCheckpoint(true)
-    // driver-fold finisher (r17, the Components pattern): the
-    // (season, year) frame is CALENDAR-bounded — ≤ 12×|years| rows at
-    // ANY corpus size, so unlike the graph folds this one fires at
-    // every scale; the corpus-scaled lineitem rollup above stays
-    // distributed. All arithmetic is exact integers (years are
-    // distinct within a season, so nd is a strict-inversion count and
-    // ty the y-tie census — the identities kendallDiscordant's bucket
-    // decomposition computes distributively), with the one final z
-    // division on identical operands. Conf-forced equality pinned in
-    // Opt17Spec; the BSP path below stays for conf=0 / oversize.
-    val localMax = s.conf.getOption("graft.mining.localThreshold")
-      .map(_.toInt).getOrElse(100000)
-    if (localMax > 0) {
-      val es = sy.select(col("nation"), col("k"), col("y_cents"))
-        .take(localMax + 1)
-      val degenerate = es.isEmpty ||
-        es.groupBy(_.getString(0)).forall(_._2.length < 2)
-      if (es.length <= localMax && !degenerate && !es.exists(r =>
-          r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))) {
-        val bySeason = es.map(r =>
-            (r.getString(0), r.getLong(1), r.getLong(2)))
-          .groupBy(_._1)
-        val per = bySeason.toSeq.collect {
-          case (season, rows) if rows.length >= 2 =>
-            val ys = rows.sortBy(_._2).map(_._3)
-            val n = ys.length.toLong
-            var nd = 0L
-            var ties = 0L
-            for (i <- ys.indices; j <- (i + 1) until ys.length) {
-              if (ys(i) > ys(j)) nd += 1L
-              else if (ys(i) == ys(j)) ties += 1L
-            }
-            val n0 = n * (n - 1) / 2
-            val sM = n0 - 2L * nd - ties
-            (season, n, sM, n * (n - 1) * (2 * n + 5))
-        }.sortBy(_._1)
+    // no fold bound needed: the frame is CALENDAR-bounded — at most
+    // 12×|years| rows at any corpus size — so the collect is tiny
+    // while the corpus-scaled rollup above stays distributed
+    s.createDataFrame(seasonalMannKendallFold(sy.collect().toSeq).asJava,
+      StructType(Seq(StructField("season", StringType),
+        StructField("n_years", LongType), StructField("s_stat", LongType),
+        StructField("s_total", LongType), StructField("z_stat", DoubleType))))
+  }
+
+  /** The seasonal Mann–Kendall fold over (season, year, e4) rows, one
+    * per (season, year): per-season S over the year-ordered e4 values,
+    * then the cross-season total and Z. Seasons with a single year
+    * carry no pair and are dropped, as the oracle's `n >= 2` filter
+    * drops them; with none left the result is the lone row
+    * ("total", 0, null, null, null). All arithmetic is exact integers
+    * — the MK variance n(n-1)(2n+5)/18 stays on the ×18 lattice so the
+    * cross-season sum is exact — with the one final z division on
+    * identical operands. Rows come out in season order, "total" last.
+    * A null season, year or e4 fails loudly instead of folding as 0. */
+  private[graft] def seasonalMannKendallFold(sy: Seq[Row]): Seq[Row] = {
+    sy.find(_.anyNull).foreach(r => throw new IllegalStateException(
+      s"q_seasonal_mann_kendall: null season, year or e4 in $r"))
+    val per = sy.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .groupBy(_._1).toSeq.collect {
+        case (season, rows) if rows.length >= 2 =>
+          val ys = rows.sortBy(_._2).map(_._3)
+          val n = ys.length.toLong
+          val sM = (for (i <- ys.indices; j <- (i + 1) until ys.length)
+            yield java.lang.Long.compare(ys(j), ys(i)).toLong).sum
+          (season, n, sM, n * (n - 1) * (2 * n + 5))
+      }.sortBy(_._1)
+    val total =
+      if (per.isEmpty) Row("total", 0L, null, null, null)
+      else {
         val sTotal = per.map(_._3).sum
         val v18 = per.map(_._4).sum
-        val z = math.floor((sTotal.toDouble - math.signum(sTotal.toDouble))
-          / math.sqrt(v18.toDouble / 18) * 1e4 + 0.5) / 1e4
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("season",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n_years",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("s_stat",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("s_total",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("z_stat",
-            org.apache.spark.sql.types.DoubleType)))
-        val out = per.map { case (season, n, sM, _) =>
-          org.apache.spark.sql.Row(season, n, sM, null, null)
-        } :+ org.apache.spark.sql.Row("total", per.length.toLong, null,
-          sTotal, z)
-        return s.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](
-              scala.jdk.CollectionConverters.SeqHasAsJava(out).asJava),
-            schema)
-          .orderBy(col("season"))
+        Row("total", per.length.toLong, null, sTotal,
+          math.floor((sTotal.toDouble - math.signum(sTotal.toDouble)) /
+            math.sqrt(v18.toDouble / 18) * 1e4 + 0.5) / 1e4)
       }
-    }
-    val nd = graft.ops.Mining.kendallDiscordant(sy, bucketCount = 4)
-    val ty = sy.groupBy(col("nation"), col("y_cents"))
-      .agg(count(lit(1)).as("c"))
-      .groupBy(col("nation"))
-      .agg(sum(expr("c * (c - 1) div 2")).as("ty"))
-    val per = sy.groupBy(col("nation")).agg(count(lit(1)).as("n"))
-      .filter(col("n") >= 2L)
-      .withColumn("n0", expr("n * (n - 1) div 2"))
-      .join(ty, Seq("nation"))
-      .join(nd, Seq("nation"), "left").na.fill(0L, Seq("nd"))
-      .withColumn("s_m", col("n0") - lit(2L) * col("nd") - col("ty"))
-      // exact MK variance n(n-1)(2n+5)/18 is not integral per
-      // season; keep the ×18 lattice so the cross-season fold is an
-      // exact long sum
-      .withColumn("var18",
-        expr("n * (n - 1) * (2 * n + 5)"))
-      .localCheckpoint(true)
-    val tot = per.agg(sum(col("s_m")).as("s_total"),
-      sum(col("var18")).as("v18"), count(lit(1)).as("n_seasons"))
-    per.select(col("nation").as("season"), col("n").as("n_years"),
-        col("s_m").as("s_stat"), lit(null).cast("long").as("s_total"),
-        lit(null).cast("double").as("z_stat"))
-      .unionByName(tot.select(lit("total").as("season"),
-        col("n_seasons").as("n_years"), lit(null).cast("long").as("s_stat"),
-        col("s_total"),
-        (floor(expr("(CAST(s_total AS DOUBLE)" +
-          " - CAST(sign(s_total) AS DOUBLE))" +
-          " / sqrt(CAST(v18 AS DOUBLE) / 18)") * 1e4 + 0.5) / 1e4)
-          .as("z_stat")))
-      .orderBy(col("season"))
+    per.map { case (season, n, sM, _) => Row(season, n, sM, null, null) } :+
+      total
   }
 
   def qSeasonality(s: SparkSession, d: String): DataFrame = {

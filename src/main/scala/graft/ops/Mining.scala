@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.util.DriverFold
 
 /** Segmentation / statistics / graph-mining operators (SURVEY §2.2):
   * RFM customer segmentation, OLS trend fitting, Markov event
@@ -652,7 +653,7 @@ object Mining {
     // fixture scale, pure stage setup) fold in-JVM under the bound.
     // Same most-frequent/smallest-label rule — integer counting, no
     // accumulation-order exposure.
-    localEdges(e, "id_a", "id_b") match {
+    DriverFold.longPairs(e, "id_a", "id_b") match {
       case Some(es) =>
         import s.implicits._
         val adj = scala.collection.mutable.LongMap
@@ -1904,7 +1905,7 @@ object Mining {
     // in-JVM when the materialized sym frame fits the bound. All
     // sigma/P/stress arithmetic is exact longs; source choice uses
     // the identical md5 order.
-    localEdges(sym, "u", "v") match {
+    DriverFold.longPairs(sym, "u", "v") match {
       case Some(dir) =>
         import s.implicits._
         return localBetweenness(dir)
@@ -1980,7 +1981,7 @@ object Mining {
     // driver-fold finisher (r16 order #5): 4 BFS rounds fold in-JVM
     // under the bound; integer (n_src, farness, ecc) triples, one
     // identical-operand floor division per node.
-    localEdges(sym, "u", "v") match {
+    DriverFold.longPairs(sym, "u", "v") match {
       case Some(dir) =>
         import s.implicits._
         val agg = scala.collection.mutable.LongMap
@@ -2043,7 +2044,7 @@ object Mining {
       .localCheckpoint(true)
     // driver-fold finisher (r16 order #5): same BFS fold; 10⁶ div d
     // stays exact integer division, sums order-free longs.
-    localEdges(sym, "u", "v") match {
+    DriverFold.longPairs(sym, "u", "v") match {
       case Some(dir) =>
         import s.implicits._
         val agg = scala.collection.mutable.LongMap
@@ -2495,36 +2496,6 @@ object Mining {
             (col("n_pairs") - col("ty"))).cast("double"))
           * 1e6 + 0.5) / 1e6).as("tau_b"))
       .orderBy(col("nation"))
-  }
-
-  /** Bounded driver-fold edge probe — the [[graft.dedup.Components]] /
-    * [[qScc]]-Tarjan diet generalized to the whole BSP graph family
-    * (r16 verdict order #5): when the edge frame fits the documented
-    * local bound (`graft.mining.localThreshold`, default 100k rows),
-    * return it as a driver array so the iteration rounds run in-JVM
-    * instead of paying per-round join+checkpoint stage setup over a
-    * few hundred rows (guide §2: each BSP round is 2-3 tiny shuffles
-    * whose stage setup dominates 100×; §5: the collect is bounded by
-    * the probe's limit pushdown). Returns None above the bound, on a
-    * null endpoint, or on non-long ids — the BSP path stays the
-    * at-scale path, conf-forced and pinned equal by Opt17Spec. Only
-    * INTEGER-exact queries use this fold: the double-iteration keys
-    * (pagerank/HITS) stay distributed because a third accumulation
-    * order would sit outside the two the oracle contract already
-    * covers. */
-  private[ops] def localEdges(e: DataFrame, ca: String, cb: String)
-      : Option[Array[(Long, Long)]] = {
-    val s = e.sparkSession
-    val localMax = s.conf.getOption("graft.mining.localThreshold")
-      .map(_.toInt).getOrElse(100000)
-    if (localMax <= 0) return None
-    val bothLong = Seq(ca, cb).forall(c => e.schema(c).dataType ==
-      org.apache.spark.sql.types.LongType)
-    if (!bothLong) return None
-    val es = e.select(col(ca), col(cb)).take(localMax + 1)
-    if (es.length > localMax ||
-        es.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-    else Some(es.map(r => (r.getLong(0), r.getLong(1))))
   }
 
   /** Adjacency + the 6 md5-ordered BFS sources for the sampled-source
@@ -3197,7 +3168,7 @@ object Mining {
 
   /** Bounded driver-side Tarjan over a collected cyclic core (the
     * [[qScc]] hybrid finisher — invoked only under the documented
-    * |core| ≤ graft.scc.localThreshold fold bound): iterative
+    * |core| ≤ [[graft.util.DriverFold]] bound): iterative
     * (explicit work stack, no recursion), returns every node labeled
     * with its component's MIN id — the same labeling contract as the
     * distributed fixpoint. */
@@ -3282,8 +3253,7 @@ object Mining {
       // fixpoint as the post-trim check below (which stays, for the
       // at-scale rounds where the trim DID the shrinking).
       locally {
-        val localMax = s.conf.getOption("graft.scc.localThreshold")
-          .map(_.toLong).getOrElse(100000L)
+        val localMax = DriverFold.bound(s).toLong
         if (nNodes > 0 && nNodes <= localMax &&
             edges.count() <= 4 * localMax) {
           val es = edges.select(col("src"), col("dst")).collect()
@@ -3359,8 +3329,7 @@ object Mining {
       // blocks. The distributed label fixpoint below remains the
       // at-scale path for cores above the bound (Round15Spec forces
       // it at test scale and pins equality with this finisher).
-      val localMax = s.conf.getOption("graft.scc.localThreshold")
-        .map(_.toLong).getOrElse(100000L)
+      val localMax = DriverFold.bound(s).toLong
       if (nNodes > 0 && nNodes <= localMax &&
           edges.count() <= 4 * localMax) {
         val es = edges.select(col("src"), col("dst")).collect()
@@ -3528,7 +3497,7 @@ object Mining {
     // id order topological, so the whole relaxation fixpoint is one
     // in-JVM DP pass when the DAG fits the bound — replacing 7-step
     // relaxation jobs that are pure stage setup at fixture scale.
-    localEdges(edges, "src", "dst") match {
+    DriverFold.longPairs(edges, "src", "dst") match {
       case Some(es) =>
         import s.implicits._
         val dist = scala.collection.mutable.LongMap.empty[Long]

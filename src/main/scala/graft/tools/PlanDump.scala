@@ -28,8 +28,9 @@ object PlanDump {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_PLANCONF="k=v,k2=v2": session-conf overrides, so the
-    // conf-gated at-scale paths (driver-fold fallbacks forced via
-    // graft.*.localThreshold=0) can be plan-dumped beside the default
+    // at-scale BSP twins of the driver folds (forced via
+    // graft.mining.localThreshold=0, see graft.util.DriverFold) can be
+    // plan-dumped beside the default
     sys.env.get("SPARK_GRAFT_PLANCONF").foreach(_.split(",")
       .map(_.trim).filter(_.contains("=")).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -99,26 +97,13 @@ class BoundedStreamSpec extends SparkSuite {
   }
 
   test("streaming queries start only inside Events.runBounded") {
-    def read(f: java.io.File): Seq[String] =
-      java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"source root missing: ${root.getAbsolutePath}")
-    def files(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f =>
-        if (f.isDirectory) files(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
     val starter = """\.start\(\)|awaitTermination""".r
-    val hits = for {
-      f <- files(root)
-      (line, i) <- read(f).zipWithIndex
-      code = line.trim
-      if !code.startsWith("*") && !code.startsWith("/**") &&
-        !code.startsWith("//")
-      if starter.findFirstIn(code).isDefined
-    } yield (f, i, code)
+    val hits = SourceScan.codeLines.filter(h =>
+      starter.findFirstIn(h._3).isDefined)
 
-    val events = new java.io.File(root, "graft/streaming/Events.scala")
-    val lines = read(events)
+    val events = new java.io.File(SourceScan.root,
+      "graft/streaming/Events.scala")
+    val lines = SourceScan.read(events)
     val from = lines.indexWhere(_.contains("def runBounded"))
     val to = lines.indexWhere(_.trim.startsWith("/**"), from)
     assert(from >= 0 && to > from, "runBounded not found")

@@ -18,9 +18,9 @@ class Opt16Spec extends SparkSuite {
       graft.dedup.Components.keepers(pairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = run() // default threshold: driver union-find
-    spark.conf.set("graft.components.localThreshold", "0")
+    spark.conf.set("graft.mining.localThreshold", "0")
     val bsp = try run() // forced: min-label pointer-jumping BSP
-    finally spark.conf.unset("graft.components.localThreshold")
+    finally spark.conf.unset("graft.mining.localThreshold")
     assert(local == bsp,
       s"local=${local.toSeq.sorted.take(20)} bsp=${bsp.toSeq.sorted.take(20)}")
     assert(local.nonEmpty, "degenerate fixture: no near-dup pairs")
@@ -41,9 +41,9 @@ class Opt16Spec extends SparkSuite {
       graft.dedup.Components.keepers(pairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = run()
-    spark.conf.set("graft.components.localThreshold", "0")
+    spark.conf.set("graft.mining.localThreshold", "0")
     val bsp = try run()
-    finally spark.conf.unset("graft.components.localThreshold")
+    finally spark.conf.unset("graft.mining.localThreshold")
     val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L,
       20L -> 20L, 21L -> 20L)

@@ -40,14 +40,10 @@ class Opt17Spec extends SparkSuite {
   pin("q_closeness_approx", graft.ops.Mining.qClosenessApprox)
   pin("q_harmonic_centrality", graft.ops.Mining.qHarmonicCentrality)
   pin("q_dag_longest_path", graft.ops.Mining.qDagLongestPath)
-  pin("q_seasonal_mann_kendall", graft.ops.Behavior.qSeasonalMannKendall)
 
   test("q_scc: pre-trim Tarjan finisher equals the conf-forced " +
       "BSP peel (and covers isolated remaining nodes)") {
-    val local = rows(graft.ops.Mining.qScc(spark, sf))
-    spark.conf.set("graft.scc.localThreshold", "0")
-    val bsp = try rows(graft.ops.Mining.qScc(spark, sf))
-    finally spark.conf.unset("graft.scc.localThreshold")
+    val (local, bsp) = bothPaths(graft.ops.Mining.qScc(spark, sf))
     assert(local == bsp, s"q_scc diverged:\nlocal=${local.take(25)}")
     assert(local.nonEmpty)
   }

@@ -132,9 +132,9 @@ class Round15Spec extends SparkSuite {
     def run() = graft.ops.Mining.qScc(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val hybrid = run()
-    spark.conf.set("graft.scc.localThreshold", "0")
+    spark.conf.set("graft.mining.localThreshold", "0")
     val bsp = try run()
-      finally spark.conf.unset("graft.scc.localThreshold")
+      finally spark.conf.unset("graft.mining.localThreshold")
     assert(bsp == hybrid,
       s"bsp-only=${(bsp -- hybrid).take(5)} hybrid-only=${(hybrid -- bsp).take(5)}")
   }
